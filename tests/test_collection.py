@@ -384,10 +384,12 @@ def test_delete_removes_ann_sidecars(spark, fresh_warehouse):
         embedder=HashEmbedder(dim=16),
     ).save()
     col.build_ann_index()
+    col.build_pq_index(m=4, k=4)
     path = col.catalog.resolve("view-sidecars")["path"]
-    assert os.path.exists(path + "_ann") and os.path.exists(path + "_ann_model")
+    sidecars = ("_ann", "_ann_model", "_pq", "_pq_books.json")
+    assert all(os.path.exists(path + s) for s in sidecars)
     EmbeddingCollection.delete(spark, "view-sidecars")
-    for p in (path, path + "_ann", path + "_ann_model"):
+    for p in (path,) + tuple(path + s for s in sidecars):
         assert not os.path.exists(p)
 
 
@@ -620,3 +622,45 @@ def test_vacuum_removes_orphans_keeps_live_index(spark, fresh_warehouse):
     assert col.df.count() == 10
     # the live index still answers queries after vacuum
     assert col.nearest_query_approx("doc 3 alpha beta", k=1).count() == 1
+
+
+def test_vacuum_clears_upsert_swap_dirs_so_upsert_recovers(spark, fresh_warehouse):
+    """A crash after upsert's second rename leaves a non-empty
+    ``.upsert.old``, on which every later upsert's rename fails. vacuum()
+    reports it (and ``.upsert.tmp``) as swap_upsert_dir and removes it, and
+    the next upsert then succeeds."""
+    col = EmbeddingCollection.new(
+        spark, [f"doc {i}" for i in range(6)], None, None, "upswap",
+        embedder=HashEmbedder(dim=16),
+    ).save()
+    path = col.catalog.resolve("view-upswap")["path"]
+    os.makedirs(path + ".upsert.old")
+    open(os.path.join(path + ".upsert.old", "part-0.parquet"), "w").write("x")
+    os.makedirs(path + ".upsert.tmp")
+
+    audit = {r["artifact"]: r["kind"] for r in col.vacuum().collect()}
+    base = os.path.basename(path)
+    assert audit == {
+        base + ".upsert.old": "swap_upsert_dir",
+        base + ".upsert.tmp": "swap_upsert_dir",
+    }
+    assert not os.path.exists(path + ".upsert.old")
+    batch = spark.createDataFrame(
+        [("id0", "doc zero revised"), ("new1", "a new doc")], "id string, document string"
+    )
+    col.upsert(batch)
+    assert col.df.count() == 7
+    assert col.catalog.resolve("view-upswap")["n_rows"] == 7
+
+
+def test_vacuum_keeps_upsert_old_when_live_table_is_missing(spark, fresh_warehouse):
+    """A crash BETWEEN upsert's two renames leaves the data only in
+    ``.upsert.old``: vacuum must not report or remove it."""
+    col = EmbeddingCollection.new(
+        spark, [f"doc {i}" for i in range(3)], None, None, "upgap",
+        embedder=HashEmbedder(dim=16),
+    ).save()
+    path = col.catalog.resolve("view-upgap")["path"]
+    os.rename(path, path + ".upsert.old")
+    assert col.vacuum().collect() == []
+    assert os.path.exists(path + ".upsert.old")

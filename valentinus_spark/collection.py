@@ -55,7 +55,14 @@ from valentinus_spark.errors import (
     ViewNameError,
 )
 from valentinus_spark.filters import compile_filters
-from valentinus_spark.functions.vector import cosine_similarity, dot, l2_distance
+from valentinus_spark.functions.vector import (
+    cosine_from_norms,
+    cosine_similarity,
+    dot,
+    l2_distance,
+    l2_norm,
+    vector_norm,
+)
 from valentinus_spark.session import warehouse_dir
 
 # reference view-name gate (embeddings.rs:107-109)
@@ -585,7 +592,11 @@ class EmbeddingCollection:
         return the audit as a DataFrame ``(artifact, kind, action)``.
 
         Orphans accrue from crashed maintenance jobs: ``compact()``'s
-        swap dirs (``.compact.tmp``/``.compact.old``), abandoned
+        swap dirs (``.compact.tmp``/``.compact.old``), ``upsert()``'s
+        (``.upsert.tmp``/``.upsert.old`` — a leftover ``.old`` makes every
+        later upsert fail at its rename; it is removed only while the live
+        table exists, since a crash between upsert's two renames leaves
+        the data ONLY in ``.old``), abandoned
         two-phase staging dirs (``.compact-<token>``), and ANN/PQ index
         sidecars whose catalog flag was since dropped (an index rebuilt
         under a different name, or a manifest restored from backup).
@@ -599,9 +610,14 @@ class EmbeddingCollection:
         name = os.path.basename(path)
         found: list[tuple[str, str]] = []
         for d in sorted(os.listdir(base)):
-            full = os.path.join(base, d)
             if d in (name + ".compact.tmp", name + ".compact.old"):
                 found.append((d, "swap_compaction_dir"))
+            elif d == name + ".upsert.tmp" or (
+                # .old is the ONLY copy when upsert crashed between its
+                # two renames (live path gone) — keep it then
+                d == name + ".upsert.old" and os.path.exists(path)
+            ):
+                found.append((d, "swap_upsert_dir"))
             elif d.startswith(name + ".compact-"):
                 found.append((d, "staged_compaction_dir"))
             elif d in (name + "_ann", name + "_ann_model") and not entry.get(
@@ -670,11 +686,15 @@ class EmbeddingCollection:
         """Drop data + catalog entry (embeddings.rs:419-455)."""
         catalog = catalog or CollectionCatalog(spark)
         entry = catalog.resolve(view_name)  # raises NotFoundError if absent
-        # data + the ANN sidecars build_ann_index wrote next to it —
-        # otherwise deleted collections orphan their index artifacts
-        for p in (entry["path"], entry["path"] + "_ann", entry["path"] + "_ann_model"):
-            if os.path.exists(p):
+        # data + the ANN/PQ sidecars build_ann_index/build_pq_index wrote
+        # next to it — once the catalog entry is gone vacuum() cannot
+        # find them, so a delete that skipped one would orphan it for good
+        for suffix in ("", "_ann", "_ann_model", "_pq", "_pq_books.json"):
+            p = entry["path"] + suffix
+            if os.path.isdir(p):
                 shutil.rmtree(p)
+            elif os.path.exists(p):
+                os.remove(p)
         catalog.remove(view_name)
 
     # ---------------- accessors (embeddings.rs:457-475) -------------------
@@ -731,7 +751,7 @@ class EmbeddingCollection:
           never sorted (embeddings.rs:373-381; SURVEY.md §7.4.1).
         - ``num_results=0`` → all matches (embeddings.rs:375).
         """
-        qv = [float(x) for x in self.embedder.embed_texts([query_string])[0]]
+        qv = self.embedder.embed_texts([query_string])[0]
         vec = self._vec()
         sim = dot(vec, qv) if metric == "dot" else cosine_similarity(vec, qv)
         out = (
@@ -765,23 +785,28 @@ class EmbeddingCollection:
         per-qid window top-k (WindowGroupLimit: partial top-k map-side,
         no global sort). Same metadata filter and dot>0 keep-rule as
         cosine_query; returns (qid, id, document, similarity, metadata)
-        ranked per qid."""
+        ranked per qid.
+
+        Cosine norms are computed once per side, not per pair: |q| on the
+        driver into the broadcast query frame's ``qnorm`` column, |a| once
+        per stored row BEFORE the cross join, so each (row, probe) pair
+        pays only the dot product."""
         if not query_strings:
             raise ValueError("query_strings must be non-empty")
         qvs = self.embedder.embed_texts(list(query_strings))
         queries = self.spark.createDataFrame(
-            [(i, [float(x) for x in qvs[i]]) for i in range(len(qvs))],
-            "qid int, qvec array<double>",
+            [(i, [float(x) for x in v], vector_norm(v)) for i, v in enumerate(qvs)],
+            "qid int, qvec array<double>, qnorm double",
         )
         vec = self._vec()
-        sim = (
-            dot(vec, F.col("qvec"))
-            if metric == "dot"
-            else cosine_similarity(vec, F.col("qvec"))
-        )
         base = self.df.filter(
             compile_filters(f_where, promoted_columns=self.df.columns)
         )
+        if metric == "dot":
+            sim = dot(vec, F.col("qvec"))
+        else:
+            base = base.withColumn("_anorm", l2_norm(vec))
+            sim = cosine_from_norms(vec, F.col("qvec"), F.col("_anorm"), F.col("qnorm"))
         scored = (
             base.crossJoin(F.broadcast(queries))
             .withColumn("similarity", sim)
@@ -1036,7 +1061,7 @@ class EmbeddingCollection:
         return row["id"]
 
     def nearest_query_df(self, query_string: str, k: int = 1) -> DataFrame:
-        qv = [float(x) for x in self.embedder.embed_texts([query_string])[0]]
+        qv = self.embedder.embed_texts([query_string])[0]
         return (
             self.df.withColumn("distance", l2_distance(self._vec(), qv))
             .orderBy(F.asc("distance"), F.asc("id"))

@@ -9,26 +9,46 @@ cosine scan is a single codegen stage over columnar Parquet input instead
 of the reference's single-threaded deserialized-blob loop.
 
 All functions accept a column (array<numeric>) and either another column or
-a Python list (compiled to an array literal — the broadcast-query-vector
-case: the driver embeds the query once and ships it as a literal into every
-task, embeddings.rs:343-349 ≈ literal_vector).
+a Python sequence — the broadcast-query-vector case: the driver embeds the
+query once and ships it into every task as ONE typed ``array<double>``
+literal (embeddings.rs:343-349 ≈ literal_vector), one plan leaf whatever
+the dim. For a Python query, ``cosine_similarity`` also folds |q| on the
+driver and ships it as a double constant, so no row aggregates over the
+constant query vector.
 
 Accumulation is double-precision left-fold regardless of input element
 type, matching DuckDB's list_dot_product closely enough that results agree
-to ~1e-12 (the correctness harness rounds to 4 decimals).
+to ~1e-12 (the correctness harness rounds to 4 decimals). The driver-side
+|q| uses the same fold, in the same order, so it is bit-identical to
+``l2_norm`` evaluated in Spark.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def literal_vector(values: Sequence[float]) -> Column:
-    """A query vector as an array<double> literal (broadcast to all tasks)."""
-    return F.array(*[F.lit(float(v)) for v in values])
+    """A query vector as ONE ``array<double>`` Literal (broadcast to all
+    tasks). Built from a float64 ndarray, so values round-trip exactly
+    (float32 inputs widen losslessly), and a single leaf keeps the
+    analyzer from walking dim children on every DataFrame op."""
+    return F.lit(np.asarray(values, dtype=np.float64))
+
+
+def vector_norm(values: Sequence[float]) -> float:
+    """|v| of a driver-side vector, folded exactly as ``l2_norm`` folds a
+    column (``acc + x*x`` left to right from 0.0, then sqrt), so the
+    driver constant is bit-identical to the per-row aggregate."""
+    acc = 0.0
+    for x in np.asarray(values, dtype=np.float64).tolist():
+        acc = acc + x * x
+    return math.sqrt(acc)
 
 
 def _as_col(v: Column | Sequence[float]) -> Column:
@@ -45,7 +65,8 @@ def dot(a: Column | str, b: Column | Sequence[float]) -> Column:
     )
 
 
-def _norm(a: Column) -> Column:
+def l2_norm(a: Column) -> Column:
+    """|a| per row: sqrt of the ``acc + x*x`` left fold from 0.0."""
     return F.sqrt(
         F.aggregate(a.cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x)
     )
@@ -80,10 +101,21 @@ def finite_embedding(a: Column | str) -> Column:
 def cosine_similarity(a: Column | str, b: Column | Sequence[float]) -> Column:
     """True cosine = dot/(|a||b|). The reference calls its raw dot "cosine"
     (embeddings.rs:334-372) — that is only cosine for pre-normalized
-    vectors; ``dot()`` is the compat mode (SURVEY.md §7.4.2)."""
+    vectors; ``dot()`` is the compat mode (SURVEY.md §7.4.2).
+
+    A Python ``b`` gets its norm from ``vector_norm`` on the driver; a
+    column ``b`` is normed per row."""
     a = F.col(a) if isinstance(a, str) else a
-    b = _as_col(b)
-    denom = _norm(a.cast("array<double>")) * _norm(b)
+    if isinstance(b, Column):
+        return cosine_from_norms(a, b, l2_norm(a), l2_norm(b))
+    return cosine_from_norms(a, literal_vector(b), l2_norm(a), F.lit(vector_norm(b)))
+
+
+def cosine_from_norms(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Column:
+    """dot(a, b) / (a_norm * b_norm) for callers that already hold the
+    norms (a driver constant, or a per-row column computed before a
+    cross join)."""
+    denom = a_norm * b_norm
     # zero vectors (e.g. empty documents) get similarity 0, not a
     # divide-by-zero (ANSI mode errors on x/0)
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
@@ -105,7 +137,7 @@ def l2_normalize(a: Column | str) -> Column:
     """Unit-normalize an embedding column (so raw dot ≡ cosine)."""
     a = F.col(a) if isinstance(a, str) else a
     a = a.cast("array<double>")
-    n = _norm(a)
+    n = l2_norm(a)
     return F.when(n > 0, F.transform(a, lambda x: x / n)).otherwise(a)
 
 
